@@ -16,6 +16,7 @@ import hashlib
 import json
 import os
 import shutil
+import sys
 
 import numpy as np
 import pyarrow as pa
@@ -202,3 +203,9 @@ def build(out_dir: str, seed: int) -> str:
     with open(os.path.join(out_dir, "MANIFEST.json"), "w") as f:
         json.dump({"params": params, "files": files}, f, indent=1, sort_keys=True)
     return fingerprint(out_dir)
+
+
+if __name__ == "__main__":
+    # python3 inputs.py DIR SEED [DIR SEED ...]
+    for out_dir, seed in zip(sys.argv[1::2], sys.argv[2::2]):
+        build(out_dir, int(seed))

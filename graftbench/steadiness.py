@@ -8,8 +8,9 @@ and end-to-end metric the median, quartiles and relative spread
 Run from the repository root. Each run is ``run.py`` in its own
 process with ``--trace 0`` and a distinct seed; the host calibration
 ratio each run printed is listed beside it as context (it is not a
-gated metric). Spreads are checked against the bounds in
-BENCHMARK.json; the raw runs are saved under .work/.
+gated metric). Every metric's spread, and the size of its median's
+shift from the first set in either direction, are checked against its
+bound in BENCHMARK.json; the raw runs are saved under .work/.
 """
 
 from __future__ import annotations
@@ -61,6 +62,8 @@ def main(argv=None) -> int:
     workloads = a.workloads.split(",") if a.workloads else [w["name"] for w in spec["workloads"]]
 
     runs: dict[str, list[list[dict]]] = {w: [] for w in workloads}
+    os.makedirs(os.path.join(BENCH, ".work"), exist_ok=True)
+    path = os.path.join(BENCH, ".work", f"steadiness-{int(time.time())}.json")
     seed = a.first_seed
     for _ in range(a.sets):
         for w in workloads:
@@ -74,6 +77,8 @@ def main(argv=None) -> int:
                       + " ".join(f"{k}={v['value']:.4g}" for k, v in r["metrics"].items()),
                       flush=True)
                 batch.append(r)
+                with open(path, "w") as f:  # saved as it goes
+                    json.dump(runs | {w: runs[w] + [batch]}, f, indent=1)
             runs[w].append(batch)
 
     ok = True
@@ -83,22 +88,17 @@ def main(argv=None) -> int:
         for i, batch in enumerate(runs[w]):
             for name in bounds:
                 med, q1, q3, rel = spread([r["metrics"][name]["value"] for r in batch])
-                gated = name != "setup_s"
                 shift = med / first[name] - 1 if name in first else 0.0
                 first.setdefault(name, med)
                 flag = ""
-                if gated and rel > bounds[name]:
+                if rel > bounds[name]:
                     flag, ok = " SPREAD>BOUND", False
-                elif gated and rel > bounds[name] / 3:
+                elif rel > bounds[name] / 3:
                     flag = " spread>bound/3"
-                if shift > bounds[name]:
+                if abs(shift) > bounds[name]:
                     flag, ok = flag + " SHIFT>BOUND", False
                 print(f"set{i + 1} {name:15s} median={med:.4g} q1={q1:.4g} q3={q3:.4g} "
                       f"spread={rel:.3f} bound={bounds[name]} shift={shift:+.3f}{flag}")
-    os.makedirs(os.path.join(BENCH, ".work"), exist_ok=True)
-    path = os.path.join(BENCH, ".work", f"steadiness-{int(time.time())}.json")
-    with open(path, "w") as f:
-        json.dump(runs, f, indent=1)
     print(f"\nruns saved to {path}; verdict: {'steady' if ok else 'NOT steady'}")
     return 0 if ok else 1
 
